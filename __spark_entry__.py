@@ -273,6 +273,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = points_v(spark, sf_dir)
     init = centroids_v(spark, sf_dir)
     res = lloyd(pts, init, max_iterations=KMEANS_ITERS)
+    res.assignments.unpersist()
     out = spark.createDataFrame(res.centroids, "id int, x double, y double")
     return out.select("id", F.round("x", 6).alias("x"), F.round("y", 6).alias("y"))
 
@@ -2661,6 +2662,7 @@ def q_kmeans_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = points_v(spark, sf_dir)
     init = scalable_init(pts, k=8, rounds=3, seed=11, draw_fn="md5")
     res = lloyd(pts, init, max_iterations=KMEANS_ITERS)
+    res.assignments.unpersist()
     out = spark.createDataFrame(res.centroids, "id int, x double, y double")
     return out.select(
         "id", F.round("x", 6).alias("x"), F.round("y", 6).alias("y")

@@ -149,6 +149,7 @@ def main(argv: list[str] | None = None) -> int:
     else:  # reference debug path: print instead of write
         cent_df.show(truncate=False)
         print(f"objective function = {res.wcss}")
+    res.assignments.unpersist()
 
     runtime_ms = round((time.perf_counter() - t0) * 1000, 1)
     print(

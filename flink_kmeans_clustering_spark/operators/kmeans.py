@@ -49,6 +49,7 @@ import random
 from collections.abc import Sequence
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -232,68 +233,6 @@ def update_centroids(
     return agg.select(*cols)
 
 
-def update_centroids_observe(
-    assigned: DataFrame,
-    centroid_ids: Sequence[int],
-    cluster_col: str = "cluster",
-    x: str = "x",
-    y: str = "y",
-) -> list[Centroid]:
-    """O2+O3+O4 via ``df.observe`` accumulator metrics: the k×(Σx, Σy,
-    n) sums ride the assignment scan as AggregatingAccumulators — ONE
-    stage, ZERO exchange, no separate reduce tasks, no collect job.
-
-    :func:`update_centroids` (groupBy → k-row exchange) is the
-    canonical declarative form and the oracle surface; this variant
-    collapses the superstep's map+reduce stage pair to a single map
-    stage whose task-completion messages carry the merged sums.
-    MEASURED VERDICT (round 6, 100k/k=8 fixture, 5-run medians per
-    config): observe LOSES to the exchange at every partitioning
-    (2.08 vs 1.75 s @8 parts, 1.93 vs 1.53 @16, 1.95 vs 2.00 @32) —
-    CollectMetrics aggregates evaluate as interpreted
-    AggregatingAccumulators outside whole-stage codegen, and 3k
-    interpreted conditional sums per row cost more than the tiny
-    k-row exchange saves.  Kept as the measured alternative (and the
-    accumulator-harvest pattern reference); :func:`lloyd` defaults to
-    the exchange.  At cluster scale the accumulator payload is k×3
-    doubles per task — driver merge O(tasks·k), trivial at any N.
-
-    Determinism class is identical to the exchange path: per-partition
-    partial sums merged in arrival order (both are ±ulp of each other,
-    the same tolerance the WCSS golden assert already absorbs).
-
-    The conditional-sum expressions reference cluster ids through ONE
-    array literal (codegen ``references`` table), so the generated
-    stage source is byte-identical across supersteps while k is stable
-    — same Janino-cache discipline as :func:`assign_points_param`.
-
-    Empty clusters yield n=0 and are dropped (reference semantics).
-    Returns the new centroid list sorted by id.
-    """
-    from pyspark.sql import Observation
-
-    ids = [int(i) for i in centroid_ids]
-    ids_lit = array_lit(ids, kind="int")
-    aggs = []
-    for j in range(len(ids)):
-        cond = F.col(cluster_col) == F.get(ids_lit, F.lit(j))
-        aggs += [
-            F.sum(F.when(cond, F.col(x))).alias(f"_sx{j}"),
-            F.sum(F.when(cond, F.col(y))).alias(f"_sy{j}"),
-            F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).alias(f"_n{j}"),
-        ]
-    obs = Observation()
-    assigned.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
-    m = obs.get
-    out: list[Centroid] = []
-    for j, cid in enumerate(ids):
-        n = m[f"_n{j}"]
-        if n:
-            out.append((cid, float(m[f"_sx{j}"]) / n, float(m[f"_sy{j}"]) / n))
-    out.sort(key=lambda c: c[0])
-    return out
-
-
 # ---------------------------------------------------------------------------
 # O9 / O10 — objective function (WCSS)
 # ---------------------------------------------------------------------------
@@ -372,7 +311,10 @@ def moved_centroids(
 class LloydResult:
     centroids: list[Centroid]  # final centroids (empty clusters dropped)
     iterations: int  # supersteps actually run
-    assignments: DataFrame  # final re-assignment (O7) with dist2
+    # final re-assignment (O7) with dist2; with lloyd(cache=True) it is
+    # cached and materialized, and the caller owns the cache (release it
+    # with ``assignments.unpersist()`` once the outputs are written)
+    assignments: DataFrame
     wcss: float  # Σ squared Euclidean distance (O9/O10)
 
 
@@ -384,7 +326,6 @@ def lloyd(
     x: str = "x",
     y: str = "y",
     cache: bool = True,
-    update: str = "exchange",
 ) -> LloydResult:
     """Lloyd's K-Means as a driver-side bulk iteration (O5).
 
@@ -402,13 +343,13 @@ def lloyd(
     code is identical every superstep (one Janino compile per loop, not
     one per iteration).
 
-    ``update`` selects the superstep's reduce physics: ``"exchange"``
-    (default) is the groupBy k-row shuffle + collect
-    (:func:`update_centroids`); ``"observe"`` harvests the k×3 sums as
-    accumulator metrics riding the assignment scan — one stage per
-    superstep, zero exchange, but MEASURED SLOWER (interpreted
-    CollectMetrics; see :func:`update_centroids_observe`).  Equality
-    of the two paths is pinned in tests.
+    With ``cache=True`` the final assignment ``(x, y, cluster, dist2)``
+    is cached and materialized by the WCSS job, so writing it out reads
+    the cache instead of re-running the argmin.  ``lloyd`` then releases
+    the points cache it created itself; an input the caller had already
+    cached stays cached.  The returned ``assignments`` cache belongs to
+    the caller, who unpersists it when done.  ``cache=False`` creates no
+    cache at all and ``assignments`` stays lazy.
 
     For the duration of the loop the session runs with AQE disabled and
     ``spark.sql.shuffle.partitions`` pinned to k (restored afterwards):
@@ -421,6 +362,7 @@ def lloyd(
     conf = points.sparkSession.conf
     prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
     prev_sp = conf.get("spark.sql.shuffle.partitions", None)
+    owned = None  # the points cache this call creates (and releases)
     if cache:
         # a single-file CSV/parquet source yields one partition — every
         # superstep's map would run on one core.  Round-robin rebalance
@@ -443,10 +385,11 @@ def lloyd(
             n_splits = points.rdd.getNumPartitions()
         if n_splits < target:
             points = points.repartition(min(target, 4 * n_splits))
-        points = points.cache()
+        if points.storageLevel == StorageLevel.NONE:
+            points = owned = points.cache()
     current: list[Centroid] = [(int(i), float(px), float(py)) for i, px, py in init_centroids]
     iterations = 0
-    # Superstep plan construction cost (exchange mode): building
+    # Superstep plan construction cost: building
     # assign_points_param + update_centroids Column-by-Column is ~40
     # py4j round trips per superstep (~0.07 s at k=8 — a third of the
     # whole superstep on the 100k fixture).  Instead the assignment is
@@ -500,25 +443,19 @@ def lloyd(
         conf.set("spark.sql.adaptive.enabled", "false")
         conf.set("spark.sql.shuffle.partitions", str(max(1, len(current))))
         for _ in range(max_iterations):
-            if update == "observe":
-                assigned = assign_points_param(points, current, x=x, y=y)
-                new = update_centroids_observe(
-                    assigned, [c[0] for c in current], x=x, y=y
+            new_rows = (
+                points.selectExpr(
+                    "`" + x.replace("`", "``") + "`",
+                    "`" + y.replace("`", "``") + "`",
+                    _assign_expr(current),
                 )
-            else:
-                new_rows = (
-                    points.selectExpr(
-                        "`" + x.replace("`", "``") + "`",
-                        "`" + y.replace("`", "``") + "`",
-                        _assign_expr(current),
-                    )
-                    .groupBy(_gid)
-                    .agg(*_aggs)
-                    .select(*_outs)
-                    .collect()
-                )
-                new = [(int(r["id"]), float(r[x]), float(r[y])) for r in new_rows]
-                new.sort(key=lambda c: c[0])
+                .groupBy(_gid)
+                .agg(*_aggs)
+                .select(*_outs)
+                .collect()
+            )
+            new = [(int(r["id"]), float(r[x]), float(r[y])) for r in new_rows]
+            new.sort(key=lambda c: c[0])
             iterations += 1
             if epsilon is not None:
                 old_by_id = {c[0]: c for c in current}
@@ -534,9 +471,15 @@ def lloyd(
                 current = new
 
         assignments = assign_points_param(points, current, x=x, y=y, dist2_col="dist2")
+        if cache:
+            assignments = assignments.cache()
         row = objective_from_assigned(assignments).collect()[0]
         wcss = float(row["wcss"]) if row["wcss"] is not None else 0.0
     finally:
+        if owned is not None:
+            # the assignment cache is fully loaded by now, so it survives
+            # the release of the points cache it was computed from
+            owned.unpersist()
         conf.set("spark.sql.adaptive.enabled", prev_aqe)
         if prev_sp is not None:
             conf.set("spark.sql.shuffle.partitions", prev_sp)

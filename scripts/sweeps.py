@@ -44,7 +44,9 @@ from flink_kmeans_clustering_spark.sources.csv import (
 def _run_once(points: DataFrame, init, iterations: int, epsilon: float | None):
     t0 = time.perf_counter()
     res = lloyd(points, init, max_iterations=iterations, epsilon=epsilon)
-    return res, round((time.perf_counter() - t0) * 1000, 1)
+    ms = round((time.perf_counter() - t0) * 1000, 1)
+    res.assignments.unpersist()  # sweeps only read the WCSS
+    return res, ms
 
 
 def synthetic_points(spark: SparkSession, n: int, seed: int = 11) -> DataFrame:

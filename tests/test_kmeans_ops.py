@@ -150,6 +150,76 @@ def test_lloyd_drops_empty_cluster_forever(spark):
     assert [c[0] for c in res.centroids] == [0]
 
 
+def _n_persisted(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())  # noqa: SLF001
+
+
+def _blob_points(spark, n_parts: int):
+    rows = [(i, float(i % 5) + (i % 3) * 0.1, float((i * 7) % 11)) for i in range(400)]
+    return spark.createDataFrame(rows, "point_id long, x double, y double").repartition(
+        n_parts
+    )
+
+
+LLOYD_INIT = [(0, 0.0, 0.0), (1, 4.0, 10.0), (2, 2.0, 5.0)]
+
+
+def test_lloyd_leaves_only_the_assignment_cache(spark):
+    """cache=True: the points cache lloyd creates is released, the
+    final assignment is cached and materialized (writing it reads the
+    cache, not the argmin), and unpersisting it restores the count of
+    persisted RDDs."""
+    from pyspark import StorageLevel
+
+    from flink_kmeans_clustering_spark.plans import explain_str
+
+    pts = _blob_points(spark, 2)  # fewer splits than slots: lloyd repartitions
+    before = _n_persisted(spark)
+    res = lloyd(pts, LLOYD_INIT, max_iterations=3)
+    assert _n_persisted(spark) == before + 1
+    assert res.assignments.storageLevel != StorageLevel.NONE
+    plan = explain_str(res.assignments.select("cluster", "x", "y"))
+    root = plan.split("== Physical Plan ==")[1].split()[0]
+    assert root == "InMemoryTableScan", plan
+    # same assignment as the uncached loop (sums differ by ulps only:
+    # the uncached scan is not rebalanced, so partial sums merge in
+    # another order)
+    want = lloyd(pts, LLOYD_INIT, max_iterations=3, cache=False)
+    got = sorted(res.assignments.collect())
+    exp = sorted(want.assignments.collect())
+    assert [r[:4] for r in got] == [r[:4] for r in exp]
+    assert [r["dist2"] for r in got] == pytest.approx([r["dist2"] for r in exp], rel=1e-9)
+    res.assignments.unpersist()
+    assert _n_persisted(spark) == before
+
+
+def test_lloyd_keeps_the_callers_cache(spark):
+    """An input the caller cached stays cached after lloyd, whether
+    lloyd scans it directly or caches its own rebalanced copy."""
+    from pyspark import StorageLevel
+
+    slots = spark.sparkContext.defaultParallelism
+    for n_parts in (slots, 1):
+        pts = _blob_points(spark, n_parts).cache()
+        pts.count()
+        before = _n_persisted(spark)
+        res = lloyd(pts, LLOYD_INIT, max_iterations=2)
+        assert pts.storageLevel != StorageLevel.NONE
+        res.assignments.unpersist()
+        assert _n_persisted(spark) == before
+        pts.unpersist()
+
+
+def test_lloyd_cache_false_creates_no_cache(spark):
+    from pyspark import StorageLevel
+
+    pts = _blob_points(spark, 2)
+    before = _n_persisted(spark)
+    res = lloyd(pts, LLOYD_INIT, max_iterations=2, cache=False)
+    assert res.assignments.storageLevel == StorageLevel.NONE
+    assert _n_persisted(spark) == before
+
+
 def test_mllib_and_lloyd_agree_at_fixpoint(spark):
     """SURVEY §7.5 parity note, closed: on well-separated blobs the
     packaged MLlib path (k-means|| init) and the custom Lloyd loop
@@ -197,25 +267,6 @@ def test_mllib_and_lloyd_agree_at_fixpoint(spark):
         assert relabel.setdefault(c, theirs[pid]) == theirs[pid]
     assert len(set(relabel.values())) == len(relabel)
     pts.unpersist()
-
-
-def test_lloyd_observe_and_exchange_updates_agree(spark):
-    """The two superstep reduce paths — groupBy k-row exchange vs
-    df.observe accumulator metrics — must produce identical centroids
-    (1e-9), identical surviving ids, and the same WCSS on a fixture
-    with an emptying cluster (drop-semantics parity)."""
-    from flink_kmeans_clustering_spark.operators.kmeans import lloyd
-
-    rows = [(i, float(i % 7), float((i * 3) % 11)) for i in range(500)]
-    pts = spark.createDataFrame(rows, "point_id long, x double, y double")
-    init = [(0, 0.0, 0.0), (1, 6.0, 10.0), (7, 1e6, 1e6)]  # 7 empties
-    a = lloyd(pts, init, max_iterations=5, update="exchange")
-    b = lloyd(pts, init, max_iterations=5, update="observe")
-    assert [c[0] for c in a.centroids] == [c[0] for c in b.centroids]
-    for (ia, xa, ya), (ib, xb, yb) in zip(a.centroids, b.centroids):
-        assert abs(xa - xb) < 1e-9 and abs(ya - yb) < 1e-9
-    assert abs(a.wcss - b.wcss) / max(a.wcss, 1e-12) < 1e-9
-    assert 7 not in [c[0] for c in b.centroids]
 
 
 def test_mllib_fixpoint_checked_by_lloyd_nd_at_scale(spark):

@@ -337,6 +337,25 @@ def test_partitioned_sink_readback_prunes_partitions(spark, tmp_path):
     assert "PartitionFilters" in s and "event_type" in s.split("PartitionFilters", 1)[1][:200]
 
 
+def test_single_file_csv_sink_writes_at_input_parallelism(spark, tmp_path):
+    """The single-file sink runs one write task per input partition: a
+    ``coalesce(1)`` would pull the whole upstream into one task."""
+    from flink_kmeans_clustering_spark.sinks import write_csv_single
+
+    n = 6
+    df = spark.range(0, 600, 1, n).selectExpr("id", "id * 2 AS v")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = max(tracker.getJobIdsForGroup(), default=-1)
+    write_csv_single(df, str(tmp_path / "out.csv"), flink_compat=True)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # noqa: SLF001
+    jobs = [j for j in tracker.getJobIdsForGroup() if j > before]
+    tasks = [
+        tracker.getStageInfo(s).numTasks for j in jobs for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert tasks == [n], tasks
+
+
 def test_ivf_cell_layout_probe_is_partition_pruned(spark, tmp_path):
     from flink_kmeans_clustering_spark.operators.similarity import (
         ann_search,
